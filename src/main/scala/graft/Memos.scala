@@ -64,10 +64,14 @@ object PlanKeys {
   * Bounded so a long-lived session can't pin artifacts forever; the
   * eviction hook unpersists what the entry had materialized (safe:
   * Spark recomputes from lineage for any caller still holding the
-  * evicted value).
+  * evicted value). `onClear` is the release [[clear]] runs per entry
+  * — stronger than the evict hook where an explicit reset may free
+  * what capacity eviction must not (blocking unpersist, checkpoint
+  * release). Every memo joins the [[Memos]] registry when built, so
+  * [[Memos.clearAll]] reaches it without a hand-kept list.
   */
 final class BoundedMemo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => (),
-    name: String = "memo") {
+    name: String = "memo", onClear: V => Unit = (_: V) => ()) {
   private val map = new java.util.LinkedHashMap[K, V](capacity, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
       val evict = size() > capacity
@@ -108,12 +112,38 @@ final class BoundedMemo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => (),
     Option(map.get(key)).getOrElse { map.put(key, value); value }
   }
 
-  /** Drop everything, running `onEach` (then the evict hook is NOT
-    * called — callers pass the same unpersist here). */
-  def clear(onEach: V => Unit = (_: V) => ()): Unit = synchronized {
+  /** Drop everything, running `onClear` per entry (the evict hook is
+    * NOT called). */
+  def clear(): Unit = synchronized {
     val it = map.values().iterator()
-    while (it.hasNext) { try onEach(it.next()) catch { case _: Throwable => () } }
+    while (it.hasNext) { try onClear(it.next()) catch { case _: Throwable => () } }
     map.clear()
+  }
+
+  Memos.register(this)
+}
+
+/** Registry of every [[BoundedMemo]] built in this JVM. Weakly held:
+  * an engine memo lives in an object and stays registered for the
+  * JVM's life, while a memo a test builds locally is collected as
+  * usual. */
+object Memos {
+  private val live = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[BoundedMemo[_, _], java.lang.Boolean])
+
+  private[graft] def register(m: BoundedMemo[_, _]): Unit =
+    live.synchronized { live.add(m) }
+
+  /** Clear every registered memo, each with its own `onClear` release
+    * — the between-corpora / between-reps reset that makes rehearsal
+    * cells and `calib_post_clear` start from no memoized state. Memos
+    * of objects not yet initialized hold nothing to clear. */
+  def clearAll(): Unit = {
+    val memos = live.synchronized {
+      import scala.jdk.CollectionConverters._
+      live.asScala.toList
+    }
+    memos.foreach(_.clear())
   }
 }
 
@@ -128,7 +158,7 @@ final class BoundedMemo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => (),
   * a full job per call. Counts are 8 bytes, so memoizing them is free
   * and makes repeated auto-sized calls over the same frame one job
   * total. Cleared with the other memos
-  * ([[graft.ScaleBench.clearMemoCaches]]) so rehearsal marginals stay
+  * ([[graft.Memos.clearAll]]) so rehearsal marginals stay
   * per-corpus. */
 object CorpusCounts {
   private val memo =

@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   *  - one untimed JIT/codegen warmup pass runs the SAME families at
   *    sf0.01 — a dir deliberately NOT among the timed ones, so no
   *    timed dir starts memo-warm while another starts cold;
-  *  - family order is FIXED across dirs and the clearable memo
-  *    caches reset between dirs: every dir's pass does the same
+  *  - family order is FIXED across dirs and every memo resets
+  *    between dirs ([[Memos.clearAll]]): every dir's pass does the same
   *    cold/warm work, so cross-dir ratios compare corpus size, not
   *    cache luck;
   *  - the machine-speed calibration workload brackets the whole run
@@ -48,26 +48,12 @@ object ScaleBench {
 
   case class Obs(buckets: Long, capped: Long, maxBucket: Long)
 
-  /** Shared by ScaleProbe — one list to keep in lockstep when a new
-    * memo lands (the per-dir clears are what make per-corpus numbers
-    * marginal instead of cache-luck). */
-  private[graft] def clearMemoCaches(): Unit = {
-    graft.ops.Dedup.clearCandidateCache()
-    graft.ops.Dedup.clearGramsCache()
-    graft.ops.Dedup.clearBloomCache()
-    graft.ops.Dedup.clearClusterCache()
-    graft.ops.Dedup.clearEmbeddingPairCache()
-    graft.ops.Similarity.clearIvfCache()
-    graft.ops.Classifier.clearModelCache()
-    graft.CorpusCounts.clear()
-  }
-
   def main(args: Array[String]): Unit = {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_scale/x3",
         "/tmp/graft_scale/x10")
-    // family filter (mirrors ScaleProbe): a ×30 rehearsal point only
+    // family filter: a ×30 rehearsal point only
     // needs the quadratic-adjacent families — the rest are measured
     // linear at ×10 and would burn an hour of CPU re-proving it
     val famFilter: Option[Set[String]] =
@@ -87,7 +73,7 @@ object ScaleBench {
     spark.sparkContext.setLogLevel("WARN")
 
     // stage metrics: the shared Bench harness (one listener + drain
-    // implementation across Bench/ScaleBench/ScaleProbe)
+    // implementation across Bench/ScaleBench/ProfileQuery)
     val sm = new Bench.StageMetrics(spark)
     // cap-engagement harvest: cappedBucketPairs publishes
     // (buckets, capped_buckets, max_bucket) per executed stats
@@ -137,12 +123,12 @@ object ScaleBench {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       sm.drain()
-      Run(dir, family, wall, sm.cpuNs.sum / 1e9, sm.shufBytes.sum / 1e6,
+      Run(dir, family, wall, sm.cpuNs.sum / 1e9, sm.shufBytes / 1e6,
         sm.stages.sum, Obs(obsBuckets.sum, obsCapped.sum, obsMax.get), failed)
     }
     def runOne(dir: String, family: String): Run = {
       val cells = (0 until reps).map { i =>
-        if (i > 0) clearMemoCaches()
+        if (i > 0) Memos.clearAll()
         runOnce(dir, family)
       }
       cells.sortBy(_.cpu).apply(cells.length / 2)
@@ -157,7 +143,7 @@ object ScaleBench {
       catch { case t: Throwable =>
         System.err.println(s"[scalebench] warmup $f: ${t.getMessage}") }
     }
-    clearMemoCaches()
+    Memos.clearAll()
 
     Bench.calibWorkload(spark); sm.drain() // untimed calib JIT
     def calib(): Double = {
@@ -167,7 +153,7 @@ object ScaleBench {
     val calibPre = calib()
     val runs = dirs.flatMap { dir =>
       System.err.println(s"[scalebench] timed pass at $dir")
-      clearMemoCaches()
+      Memos.clearAll()
       active.map { f =>
         val r = runOne(dir, f)
         System.err.println(f"[scalebench] ${r.family}%-28s @ $dir%-28s " +

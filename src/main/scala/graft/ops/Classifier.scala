@@ -189,16 +189,16 @@ object Classifier {
   // (graft.Persistence scaladoc; PersistenceSpec proves it).
   private val trainMemo = new graft.BoundedMemo[
     (String, String, String, Int, Double, Int, Boolean), LogRegModel](
-    8, name = "logreg-model")
+    8, name = "logreg-model",
+    onClear = m => graft.Persistence.release(m.weights))
 
-  /** Clear the trained-model memo (rehearsal hygiene — the
-    * ScaleBench.clearMemoCaches roster). UNLIKE capacity eviction
+  /** Clear the trained-model memo (rehearsal hygiene — also run by
+    * [[graft.Memos.clearAll]]). UNLIKE capacity eviction
     * (see trainMemo), clear releases each model's checkpointed weight
     * blocks deterministically ([[graft.Persistence.release]]): a
     * clear is an explicit between-reps reset and any handle held
     * across it is dead by contract. */
-  def clearModelCache(): Unit =
-    trainMemo.clear(m => graft.Persistence.release(m.weights))
+  def clearModelCache(): Unit = trainMemo.clear()
 
   /** IMMUTABLE-INPUT ASSUMPTION (the pair-table memo contract, r17
     * advice): the memo key canonicalizes to the input's LOGICAL PLAN

@@ -78,10 +78,11 @@ object Dedup {
     * and dropped). */
   private val candidateMemo =
     new graft.BoundedMemo[(String, String, String, Int, Int, Int, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "minhash-candidates")
+      16, _.unpersist(blocking = false), name = "minhash-candidates",
+      onClear = _.unpersist())
 
   /** Drop all memoized candidate tables (unpersisting each). */
-  def clearCandidateCache(): Unit = candidateMemo.clear(_.unpersist())
+  def clearCandidateCache(): Unit = candidateMemo.clear()
 
   /** Default per-(band, bucket) membership bound for the banded LSH
     * pair generators — the quadratic escape hatch at 100 TB: one
@@ -713,8 +714,8 @@ object Dedup {
     * UNHINTED: the checkpointed batch carries accurate size stats,
     * so AQE broadcasts the (tiny) batch digest side and the ledger
     * STREAMS — never shuffles — while a 10⁶-row intake falls back to
-    * a shuffle join on its own (the IncrementalRehearsal first
-    * measured the hinted shuffle-hash form at CPU parity with the
+    * a shuffle join on its own (SCALE_REHEARSAL_r17_incremental.json
+    * first measured the hinted shuffle-hash form at CPU parity with the
     * full recompute: forcing the 50k-row ledger through an exchange
     * against a 1k-row batch threw away exactly the asymmetry the
     * ledger exists for). Corpus cost is the ledger scan alone —
@@ -792,10 +793,11 @@ object Dedup {
     * caveats as candidateMemo. */
   private val gramsMemo =
     new graft.BoundedMemo[(String, String, String, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "verify-grams")
+      16, _.unpersist(blocking = false), name = "verify-grams",
+      onClear = _.unpersist())
 
   /** Drop all memoized verify-gram tables (unpersisting each). */
-  def clearGramsCache(): Unit = gramsMemo.clear(_.unpersist())
+  def clearGramsCache(): Unit = gramsMemo.clear()
 
   /** Exact n-gram Jaccard, verified on MinHash-LSH candidates only —
     * the scale-safe way to get exact similarities: the all-pairs
@@ -1367,10 +1369,11 @@ object Dedup {
     * docs|) rows. Same caveats as candidateMemo. */
   private val clusterMemo =
     new graft.BoundedMemo[(String, String, String, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "dup-cluster-labels")
+      16, _.unpersist(blocking = false), name = "dup-cluster-labels",
+      onClear = _.unpersist())
 
   /** Drop all memoized cluster label tables (unpersisting each). */
-  def clearClusterCache(): Unit = clusterMemo.clear(_.unpersist())
+  def clearClusterCache(): Unit = clusterMemo.clear()
 
   /** `maxIters` default raised 20 → 40 (r14): the ×30 rehearsal
     * measured a 15-round convergence on x34's threshold-0.3 regime
@@ -2442,10 +2445,11 @@ object Dedup {
     * not one per consumer. Same caveats as candidateMemo. */
   private val embPairMemo =
     new graft.BoundedMemo[(String, String, String, Double, Int, Int, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "embedding-near-dup")
+      16, _.unpersist(blocking = false), name = "embedding-near-dup",
+      onClear = _.unpersist())
 
   /** Drop all memoized embedding pair tables (unpersisting each). */
-  def clearEmbeddingPairCache(): Unit = embPairMemo.clear(_.unpersist())
+  def clearEmbeddingPairCache(): Unit = embPairMemo.clear()
 
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH buckets
     * bound the candidate set, exact cosine verifies.

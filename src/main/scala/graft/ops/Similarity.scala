@@ -179,10 +179,11 @@ object Similarity {
   // non-blocking unpersist is safe for a caller still probing the
   // evicted index: Spark recomputes the assignments from lineage.
   private val ivfMemo = new graft.BoundedMemo[(String, String, String, Int, Int, Int), IvfIndex](
-    8, _.assignments.unpersist(blocking = false), name = "ivf-index")
+    8, _.assignments.unpersist(blocking = false), name = "ivf-index",
+    onClear = _.assignments.unpersist())
 
   /** Drop all memoized IVF indexes (unpersisting each). */
-  def clearIvfCache(): Unit = ivfMemo.clear(_.assignments.unpersist())
+  def clearIvfCache(): Unit = ivfMemo.clear()
 
   /** IVF list count for a corpus — the standard nlist ≈ √corpus
     * balance (a probe touches nprobe·corpus/nlist candidate rows plus
@@ -478,10 +479,11 @@ object Similarity {
     ivfShardsFor(corpus, MaxTrainK.toLong * MaxTrainK)
 
   /** Boundary-knob form of [[ivfShardsFor]] — `perShard` overrides the
-    * MaxTrainK² production boundary so [[graft.ShardRehearsal]] can
+    * MaxTrainK² production boundary so a rehearsal or spec can
     * engage the AUTO shard path at rehearsal corpus sizes (the true
     * boundary needs 16.7M vectors × 4096-centroid argmax passes — not
-    * a local measurement; the ClampRehearsal boundary-knob pattern).
+    * a local measurement; findings in SCALE_REHEARSAL_r16_shards.json
+    * and SCALE_REHEARSAL_r17_shards.json).
     * Production callers never pass it: [[ivfIndexSharded]] reaches
     * this only through the default-boundary form above. */
   private[graft] def ivfShardsFor(corpus: Long, perShard: Long): Int = {
@@ -506,8 +508,9 @@ object Similarity {
 
   /** [[ivfIndexSharded]] with the rehearsal boundary knob exposed —
     * identical code path (ONE definition; the public form delegates
-    * with the production MaxTrainK² boundary), so what
-    * [[graft.ShardRehearsal]] measures under a lowered `perShard` is
+    * with the production MaxTrainK² boundary), so what the shard
+    * rehearsals (SCALE_REHEARSAL_r16_shards.json,
+    * SCALE_REHEARSAL_r17_shards.json) measured under a lowered `perShard` is
     * exactly what a >16.7M-vector corpus executes in production. */
   private[graft] def ivfIndexShardedWithBoundary(df: DataFrame,
       idCol: String, vecCol: String, numShards: Int, k: Int,
@@ -532,8 +535,8 @@ object Similarity {
         // pass) reads the materialized columnar split instead of
         // re-scanning the source per shard — pmod(xxhash64(id)) never
         // reaches parquet as a pushed filter, so the old per-shard
-        // filter-on-source form cost 2S full corpus reads (the r16
-        // ShardRehearsal measured it at 1.6-1.7x the flat build's
+        // filter-on-source form cost 2S full corpus reads
+        // (SCALE_REHEARSAL_r16_shards.json: 1.6-1.7x the flat build's
         // CPU/vector; at the real 16.7M-vector boundary S grows with
         // the corpus and the re-reads would dominate the build)
         val split = df.select(col(idCol), col(vecCol),
@@ -544,7 +547,7 @@ object Similarity {
         // lock by design), but each is DRIVER-PACED — Lloyd-round
         // sample collects and assignment-job submissions serialize on
         // the driver, so a sequential loop leaves the 32 cores idle
-        // between one shard's rounds (the r16 ShardRehearsal localized
+        // between one shard's rounds (SCALE_REHEARSAL_r16_shards.json localized
         // the residual sharded/flat gap to exactly this S× per-job
         // fixed overhead). Submitting the builds from a small thread
         // pool overlaps those driver phases; concurrency is capped at
@@ -552,7 +555,8 @@ object Similarity {
         // driver-resident (≤ MaxTrainK × dims) centroid model plus an
         // in-flight training collect — the cap bounds driver memory at
         // 4 models regardless of the clamp-driven shard count.
-        // Measured (ShardRehearsal ×8 = 4 shards, r17, medians of 3):
+        // Measured (SCALE_REHEARSAL_r17_shards.json, ×8 = 4 shards,
+        // medians of 3):
         // sharded wall 2.5 → 1.2 s (flat 0.7 — the residual is the
         // split build + the count barriers, fixed latency not data
         // work) and sharded CPU/vector reached flat parity

@@ -362,7 +362,7 @@ object Extensions extends QueryModule {
     * actually RELEASED on the way out via the [[dropSink]] hook. */
   private val x16Results =
     new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x16-stream")
+      8, dropSink, name = "x16-stream", onClear = dropSink)
 
   /** Embedding near-dup over the FULL corpus via hyperplane-LSH
     * banding — the scale path behind x7's bounded exact baseline:
@@ -2052,7 +2052,7 @@ object Extensions extends QueryModule {
     * lock). */
   private val x72Results =
     new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x72-stream")
+      8, dropSink, name = "x72-stream", onClear = dropSink)
 
   /** STREAMING sessionization ([[graft.streaming.EventStreams.sessionizedStats]]):
     * watermarked `session_window` run to completion over the staged
@@ -2347,7 +2347,7 @@ object Extensions extends QueryModule {
     * anti-pattern ADVICE r4 flagged). */
   private val x79Results =
     new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x79-stream")
+      8, dropSink, name = "x79-stream", onClear = dropSink)
 
   /** Streaming exact dedup
     * ([[graft.streaming.EventStreams.dedupWithinWatermark]]): the
@@ -3013,7 +3013,7 @@ object Extensions extends QueryModule {
     * the x16/x72 memo pattern. */
   private val x103Results =
     new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x103-stream")
+      8, dropSink, name = "x103-stream", onClear = dropSink)
   private val docStreamDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docStreamSrcDir(sfDir: String): String =

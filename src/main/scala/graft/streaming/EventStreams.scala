@@ -281,7 +281,8 @@ object EventStreams {
     * economics the store trio exists for — except the ledger
     * LISTING, which grows with the append count (one file per batch)
     * until [[graft.ops.Dedup.compactDigestStore]] rewrites the tree
-    * (measured: IncrementalRehearsal's `stream` family). Returns the
+    * (measured: SCALE_REHEARSAL_r19_stream.json and
+    * SCALE_REHEARSAL_r20_stream.json). Returns the
     * completed query — `recentProgress` carries per-batch durations
     * for exactly that measurement.
     *

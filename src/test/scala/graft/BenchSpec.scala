@@ -318,7 +318,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("drift gates on the JIT-trivial scalar pair when present (r16 glide fix)") {
     // the r16 signature: Spark calib_wall pre 0.37 / post 0.22 (a
-    // 40% "drift" that is codegen warmup — CalibProbe measured the
+    // 40% "drift" that is codegen warmup — PERF.md r16 measured the
     // glide 0.40 → 0.19 s over 100 executions on an idle VM) while
     // the scalar pair is flat — must gate GREEN on the scalar signal
     val quiet = Seq(
