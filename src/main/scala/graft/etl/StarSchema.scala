@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   *   - DISTINCT dim builds are two-phase hash aggregates (map-side
   *     partial dedup), the right plan at any scale;
   *   - the faithful global ORDER BY before write (O1) is a range
-  *     sort; [[StarSchemaWriter]] can skip it (`sortOutputs=false`)
-  *     since partitioned parquet does not preserve global order
-  *     anyway — at 100 TB that sort is pure cost.
+  *     sort and is always applied, although partitioned parquet does
+  *     not preserve global order — at 100 TB that sort is pure cost.
   */
 object StarSchema {
 

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 
 /** Parquet sinks for the star schema (reference spark_elt_emr.py
   * :82-83, :104-105, :116-117, :126, :145, :163, :185 — SURVEY §2.1
@@ -11,57 +11,49 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `usertype`,`birth_year`, the rest unpartitioned overwrites.
   *
   * Improvement over the reference's blind append (SURVEY §4): with
-  * `idempotent=true` we switch `partitionOverwriteMode=dynamic` and
-  * SaveMode.Overwrite, so re-running a month replaces exactly its
-  * `year=/month=` partitions instead of double-appending — the
-  * at-least-once duplicate risk the reference carries. At 100 TB a
-  * re-run that appends duplicates is unrecoverable without a full
-  * rewrite; dynamic overwrite makes month re-runs idempotent for the
-  * cost of the partitions touched.
+  * `idempotent=true` the fact and time writes use SaveMode.Overwrite
+  * with the per-write `partitionOverwriteMode=dynamic` option, so
+  * re-running a month replaces exactly its `year=/month=` partitions
+  * instead of double-appending — the at-least-once duplicate risk the
+  * reference carries. At 100 TB a re-run that appends duplicates is
+  * unrecoverable without a full rewrite; dynamic overwrite makes month
+  * re-runs idempotent for the cost of the partitions touched. The
+  * session conf is never touched: the mode rides on each write.
+  *
+  * The seven tables are independent chains (optional dim merge, then
+  * write) and run concurrently through [[graft.ops.Concurrency]], so
+  * one table's small jobs fill the cores another leaves idle. Failure
+  * contract: the first failing chain's error is rethrown after its
+  * siblings' jobs are cancelled. An idempotent re-run repairs any
+  * partial state; a failed non-idempotent (append) run may leave other
+  * tables already written, as a sequential writer failing midway does.
   */
 object StarSchemaWriter {
 
   def writeAll(spark: SparkSession, staging: Staging, outputDir: String,
       idempotent: Boolean = false, maintainDims: Boolean = false): Unit = {
-    val tables = StarSchema.buildAll(staging)
-      .map { case (name, df) =>
-        name -> (if (maintainDims) mergedWithExisting(spark, name, df, s"$outputDir/$name.parquet") else df)
-      }
-    val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
-    val previousMode = spark.conf.getOption(overwriteModeKey)
-    val incrementalMode =
-      if (idempotent) {
-        spark.conf.set(overwriteModeKey, "dynamic")
-        SaveMode.Overwrite
-      } else SaveMode.Append
-
+    val incrementalMode = if (idempotent) SaveMode.Overwrite else SaveMode.Append
     def path(name: String) = s"$outputDir/$name.parquet"
-
-    try {
-      tables("bikeshare_fact_table").write
-        .partitionBy("year", "month").mode(incrementalMode)
-        .parquet(path("bikeshare_fact_table"))
-      tables("dim_time_table").write
-        .partitionBy("year", "month").mode(incrementalMode)
-        .parquet(path("dim_time_table"))
-      // the user dim is a full overwrite regardless of mode — pin
-      // static overwrite so a prior idempotent run's dynamic setting
-      // can't leave stale (usertype, birth_year) partitions behind
-      tables("dim_user_agg_table").write
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("usertype", "birth_year").mode(SaveMode.Overwrite)
-        .parquet(path("dim_user_agg_table"))
-      Seq("dim_bike_table", "dim_covid_table", "dim_weather_table", "dim_station")
-        .foreach { name =>
-          tables(name).write.mode(SaveMode.Overwrite).parquet(path(name))
-        }
-    } finally {
-      // don't leak the session-wide overwrite mode to later writers
-      if (idempotent) previousMode match {
-        case Some(v) => spark.conf.set(overwriteModeKey, v)
-        case None => spark.conf.unset(overwriteModeKey)
-      }
+    def writer(name: String, df: DataFrame): DataFrameWriter[Row] = name match {
+      case "bikeshare_fact_table" | "dim_time_table" =>
+        // dynamic is ignored by Append and scopes an Overwrite to the
+        // months this run carries
+        df.write.option("partitionOverwriteMode", "dynamic")
+          .partitionBy("year", "month").mode(incrementalMode)
+      case "dim_user_agg_table" =>
+        // the user dim is a full overwrite regardless of mode — pin
+        // static so a session-wide dynamic setting can't leave stale
+        // (usertype, birth_year) partitions behind
+        df.write.option("partitionOverwriteMode", "static")
+          .partitionBy("usertype", "birth_year").mode(SaveMode.Overwrite)
+      case _ => df.write.mode(SaveMode.Overwrite)
     }
+    val chains = StarSchema.buildAll(staging).toSeq.map { case (name, df) => () =>
+      val table = if (maintainDims) mergedWithExisting(spark, name, df, path(name)) else df
+      writer(name, table).parquet(path(name))
+    }
+    // no chain holds driver-side state, so all of them may be in flight
+    graft.ops.Concurrency.awaitAll(spark, "star-schema-write", chains.length)(chains)
   }
 
   /** Dim maintenance (beyond-parity fix): the reference cleans

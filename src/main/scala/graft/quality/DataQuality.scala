@@ -1,21 +1,23 @@
 package graft.quality
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-quality assertion harness — first-class port of the
   * reference's check script (spark_check_emr.py:20-47, SURVEY §2.4
-  * A2-A4): a named check is a scalar query over one table, an
+  * A2-A4): a named check is a scalar aggregate over one table, an
   * expectation, and a comparison; failures throw so a pipeline step
   * fails loudly.
   *
-  * Each check is a `COUNT` aggregate — at any scale it's a map-side
-  * partial count + single final row, never a collect of data.
+  * `aggregate` is a LONG-valued aggregate `Column` (a `COUNT` or
+  * `COUNT_IF`), so all checks on one table share one aggregate — at
+  * any scale a single scan with a map-side partial and one final row,
+  * never a collect of data.
   */
 final case class QualityCheck(
     checkType: String,
     tableName: String,
-    query: DataFrame => Long,
+    aggregate: Column,
     expected: Long,
     comparison: (Long, Long) => Boolean,
     describeComparison: String)
@@ -28,15 +30,13 @@ object DataQuality {
   /** `is_null` check: count of NULLs in a key column must equal 0
     * (reference spark_check_emr.py:64-67). */
   def isNull(table: String, keyColumn: String): QualityCheck =
-    QualityCheck("is_null", table,
-      df => df.filter(col(keyColumn).isNull).count(),
+    QualityCheck("is_null", table, count_if(col(keyColumn).isNull),
       expected = 0L, comparison = _ == _, describeComparison = "==")
 
   /** `is_empty` check: row count must be > 0
     * (reference spark_check_emr.py:68-85). */
   def isEmpty(table: String): QualityCheck =
-    QualityCheck("is_empty", table,
-      df => df.count(),
+    QualityCheck("is_empty", table, count(lit(1)),
       expected = 0L, comparison = _ > _, describeComparison = ">")
 
   /** The reference's exact 7-check suite over the star-schema outputs
@@ -60,14 +60,22 @@ object DataQuality {
     isNull("dim_weather_table", "weather_id"))
 
   /** Run checks against parquet outputs under `outputDir`
-    * (reference table_validate, spark_check_emr.py:20-47). Throws
-    * [[QualityViolation]] on the first failure. */
+    * (reference table_validate, spark_check_emr.py:20-47). Each
+    * distinct table is read once and all of its checks computed in one
+    * aggregate; the per-table aggregates run concurrently. Verdicts are
+    * then taken in declaration order, so the [[QualityViolation]]
+    * thrown is the first failing check's. */
   def validate(spark: SparkSession, outputDir: String,
-      checks: Seq[QualityCheck] = referenceSuite): Unit =
-    checks.foreach { c =>
-      val df = spark.read.parquet(s"$outputDir/${c.tableName}.parquet")
-      runCheck(c, df)
-    }
+      checks: Seq[QualityCheck] = referenceSuite): Unit = {
+    if (checks.isEmpty) return
+    val byTable = checks.zipWithIndex.groupBy(_._1.tableName).toSeq
+    val observed = graft.ops.Concurrency.awaitAll(spark, "quality-gate", byTable.length)(
+      byTable.map { case (table, indexed) => () =>
+        val df = spark.read.parquet(s"$outputDir/$table.parquet")
+        indexed.map(_._2).zip(observe(df, indexed.map(_._1)))
+      }).flatten.toMap
+    checks.zipWithIndex.foreach { case (c, i) => verdict(c, observed(i)) }
+  }
 
   /** Count of non-null fact foreign keys with no matching dimension
     * row — an anti-join, so it scales like any key join. */
@@ -77,7 +85,9 @@ object DataQuality {
     // same-name === would resolve to a trivially-true self-compare
     fact.select(col(factKey).as("__fact_key"))
       .filter(col("__fact_key").isNotNull).distinct()
-      .join(dim.select(col(dimKey).as("__dim_key")).distinct(),
+      // no distinct on the dim side: a left_anti result does not
+      // depend on duplicate right-side keys
+      .join(dim.select(col(dimKey).as("__dim_key")),
         col("__fact_key") === col("__dim_key"), "left_anti")
       .count()
 
@@ -135,11 +145,18 @@ object DataQuality {
 
   /** Run one check against an in-memory DataFrame (engine-level use,
     * no parquet round-trip). */
-  def runCheck(c: QualityCheck, df: DataFrame): Unit = {
-    val observed = c.query(df)
+  def runCheck(c: QualityCheck, df: DataFrame): Unit =
+    verdict(c, observe(df, Seq(c)).head)
+
+  /** All `checks` over `df` as the columns of one aggregate. */
+  private def observe(df: DataFrame, checks: Seq[QualityCheck]): Seq[Long] = {
+    val row = df.agg(checks.head.aggregate, checks.tail.map(_.aggregate): _*).head()
+    checks.indices.map(row.getLong)
+  }
+
+  private def verdict(c: QualityCheck, observed: Long): Unit =
     if (!c.comparison(observed, c.expected))
       throw QualityViolation(
         s"${c.checkType} check failed on ${c.tableName}: " +
           s"observed $observed, expected ${c.describeComparison} ${c.expected}")
-  }
 }

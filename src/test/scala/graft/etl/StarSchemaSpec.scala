@@ -189,6 +189,107 @@ class StarSchemaSpec extends AnyFunSuite {
     }
   }
 
+  test("orphanedKeys: duplicated dim keys count the same orphans as the deduplicated dim") {
+    import spark.implicits._
+    val fact = Seq(Some(1), Some(2), Some(2), Some(3), Some(4), None).toDF("k")
+    val dim = Seq(1, 1, 3, 3, 3).toDF("k")
+    // orphans are the distinct fact values 2 and 4; the NULL key is skipped
+    assert(DataQuality.orphanedKeys(fact, "k", dim, "k") == 2L)
+    assert(DataQuality.orphanedKeys(fact, "k", dim.distinct(), "k") == 2L)
+  }
+
+  test("writeAll leaves the session's partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    def observed = (spark.conf.getOption(key), spark.conf.getAll.get(key))
+    val preset = spark.conf.getAll.get(key)
+    try {
+      spark.conf.unset(key)
+      val unset = observed
+      StarSchemaWriter.runElt(spark, fixtures,
+        Files.createTempDirectory("graft_conf_unset").toString, idempotent = true)
+      assert(observed == unset)
+      assert(spark.conf.getAll.get(key).isEmpty)
+
+      spark.conf.set(key, "static")
+      StarSchemaWriter.runElt(spark, fixtures,
+        Files.createTempDirectory("graft_conf_static").toString, idempotent = true)
+      assert(spark.conf.getAll.get(key).contains("static"))
+    } finally preset match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("writeAll rethrows the error of a table whose write fails") {
+    val out = Files.createTempDirectory("graft_elt_fail").toString
+    // a regular file where the time dim's parquet directory belongs:
+    // an append cannot write under it (an overwrite would delete it)
+    Files.write(java.nio.file.Paths.get(s"$out/dim_time_table.parquet"),
+      "not a table".getBytes("UTF-8"))
+    val err = intercept[Exception] {
+      StarSchemaWriter.runElt(spark, fixtures, out)
+    }
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("dim_time_table")), err)
+  }
+
+  test("validate runs one aggregate per distinct table; the first declared violation is thrown") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val out = Files.createTempDirectory("graft_gate").toString
+    StarSchemaWriter.runElt(spark, fixtures, out)
+
+    def drainListenerBus(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
+        .invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val aggregates = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+        val readsLake = qe.analyzed.exists {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation => h.location.rootPaths.exists(_.toString.contains(out))
+            case _ => false
+          }
+          case _ => false
+        }
+        if (readsLake && qe.optimizedPlan.exists(_.isInstanceOf[Aggregate]))
+          aggregates.incrementAndGet()
+      }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    drainListenerBus()
+    spark.listenerManager.register(listener)
+    try {
+      DataQuality.validate(spark, out, DataQuality.extendedSuite)
+      drainListenerBus()
+    } finally spark.listenerManager.unregister(listener)
+    val suite = DataQuality.extendedSuite
+    assert(suite.size == 11 && suite.map(_.tableName).distinct.size == 7)
+    assert(aggregates.get == 7)
+
+    // two violating tables: an empty bike dim (declared 7th) and a
+    // covid dim with NULL keys (declared 10th)
+    StarSchema.buildBikeDim(staging.events).limit(0)
+      .write.mode("overwrite").parquet(s"$out/dim_bike_table.parquet")
+    StarSchema.buildCovidDim(staging.covids)
+      .withColumn("covid_id", lit(null).cast("date"))
+      .write.mode("overwrite").parquet(s"$out/dim_covid_table.parquet")
+    val first = intercept[QualityViolation] {
+      DataQuality.validate(spark, out, suite)
+    }
+    assert(first.getMessage ==
+      "is_empty check failed on dim_bike_table: observed 0, expected > 0")
+    val reversed = intercept[QualityViolation] {
+      DataQuality.validate(spark, out, suite.reverse)
+    }
+    assert(reversed.getMessage ==
+      "is_null check failed on dim_covid_table: observed 3, expected == 0")
+  }
+
   test("monthly incremental: append accumulates months; idempotent re-run replaces only its month") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
